@@ -11,8 +11,15 @@ collapsed into a library call:
   gold       dim_atms (SCD1), rpt_diario_balance (conditional pivot),
              top_atms_ranking (agg + window label) — sql/ddl_gold.sql:22-62
              as Spark SQL CTAS over the session catalog + parquet export
-             (the Redshift COPY/UNLOAD legs become reads/writes)
+             (the Redshift COPY leg becomes the in-engine silver frame, the
+             UNLOAD leg a parquet write)
   validate   the QA queries (qa/validate_data.py) as library calls
+
+gold and validate consume the silver DataFrame that load wrote (the
+same plan over the cached joined frame), so no step lists or scans the
+day partitions. The parquet is the durable output for downstream
+readers. The transform cache lives for one ``run_logicash_pipeline``
+call.
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from logicash_etl_spark import schemas as S
 from logicash_etl_spark.dq.rules import RuleSet, logicash_rules
 from logicash_etl_spark.functions.money import davg, dsum, money
 from logicash_etl_spark.operators.aggregates import scd1_latest
+from logicash_etl_spark.operators.caching import cache_scope, scoped_persist
 from logicash_etl_spark.operators.joins import enrich
 from logicash_etl_spark.operators.windows import ranked
 from logicash_etl_spark.pipeline.runner import Pipeline, Step
@@ -58,8 +66,9 @@ def transform(
     as_of = F.to_timestamp(F.lit(cfg.as_of)) if cfg.as_of else None
     rules = cfg.rules or logicash_rules(as_of)
     joined = enrich(fact, dim, on="id_atm", how="left", broadcast_dim=True)
-    # one source scan serves report + both splits
-    joined = joined.persist()
+    # one source scan serves report, both splits, gold and QA; freed by
+    # the caller's cache_scope (a plain persist outside one)
+    joined = scoped_persist(joined)
     report = rules.violation_counts(joined)
     clean, quarantine = rules.split(joined)
     silver = clean.withColumn("fecha_dia", F.to_date("fecha")).withColumn(
@@ -111,7 +120,10 @@ def build_gold(spark: SparkSession, silver: DataFrame, cfg: LogicashConfig) -> d
 def validate(spark: SparkSession, silver: DataFrame) -> dict[str, DataFrame]:
     """Post-load QA (qa/validate_data.py:93-148): top ATMs, daily
     summary, null audit, range audit — via temp view + SQL (EP2) to
-    exercise the SQL-over-views surface the reference uses."""
+    exercise the SQL-over-views surface the reference uses.
+
+    The pipeline passes the silver DataFrame it wrote; a frame read
+    back from ``{silver_dir}/transactions`` gives the same results."""
     silver.createOrReplaceTempView("transactions_clean")
     top = spark.sql(
         """
@@ -160,15 +172,13 @@ def run_logicash_pipeline(spark: SparkSession, cfg: LogicashConfig) -> dict:
         return report.collect()[0].asDict()
 
     def _gold(ctx):
-        silver = spark.read.parquet(f"{cfg.silver_dir}/transactions")
-        tables = build_gold(spark, silver, cfg)
+        tables = build_gold(spark, ctx["transform"][0], cfg)
         for name, df in tables.items():
             write_parquet(df, f"{cfg.gold_dir}/{name}")
         return sorted(tables)
 
     def _validate(ctx):
-        silver = spark.read.parquet(f"{cfg.silver_dir}/transactions")
-        return {k: v.collect() for k, v in validate(spark, silver).items()}
+        return {k: v.collect() for k, v in validate(spark, ctx["transform"][0]).items()}
 
     pipe = Pipeline(
         steps=[
@@ -179,4 +189,5 @@ def run_logicash_pipeline(spark: SparkSession, cfg: LogicashConfig) -> dict:
             Step("validate", _validate),
         ]
     )
-    return pipe.run()
+    with cache_scope():
+        return pipe.run()

@@ -875,19 +875,22 @@ def trade_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcore_oracle(k: int = 4, rounds: int = 3) -> str:
     """Unrolled k-core peeling CTE chain: round i keeps the edges
     whose BOTH endpoints had degree >= k in round i-1's subgraph.
-    Integer degrees, so the iterative Spark loop hash-matches."""
+    Integer degrees, so the iterative Spark loop hash-matches. The
+    round CTEs are MATERIALIZED: each is referenced several times by
+    the next round, and DuckDB inlining them grows the query
+    exponentially in the number of rounds."""
     sql = _TRADE_EDGE_SQL + """
-    , a0 AS (
+    , a0 AS MATERIALIZED (
       SELECT DISTINCT greatest(src, dst) AS u, least(src, dst) AS v
       FROM edges WHERE src <> dst
     )"""
     prev = "a0"
     for i in range(1, rounds + 1):
-        sql += f""", s{i} AS (
+        sql += f""", s{i} AS MATERIALIZED (
       SELECT u, v FROM {prev} UNION ALL SELECT v AS u, u AS v FROM {prev}
-    ), k{i} AS (
+    ), k{i} AS MATERIALIZED (
       SELECT u FROM s{i} GROUP BY u HAVING count(*) >= {k}
-    ), a{i} AS (
+    ), a{i} AS MATERIALIZED (
       SELECT e.u, e.v FROM {prev} e
         JOIN k{i} x ON x.u = e.u
         JOIN k{i} y ON y.u = e.v

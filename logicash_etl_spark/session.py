@@ -25,6 +25,22 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's RAM as a Spark size string (e.g. ``"7841m"``).
+
+    In local mode the driver JVM is the whole engine, so its heap
+    ceiling follows the machine it runs on; the other half stays for
+    Python workers, page cache and off-heap buffers. Reads ``MemTotal``
+    from ``meminfo``, falling back to ``sysconf`` where that file is
+    absent; never below 1 GiB."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        kib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return f"{max(kib // 2048, 1024)}m"
+
+
 def session_config(cpus: str | int | None = None) -> dict[str, str]:
     """The engine's default Spark conf, as a plain dict (testable)."""
     n = str(cpus or _DEFAULT_CPUS)
@@ -94,7 +110,10 @@ def get_spark(
     )
     conf = session_config(cpus)
     # local mode: one JVM; driver memory is the only memory knob.
-    conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    conf.setdefault(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+    )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -114,11 +114,9 @@ _AUDITED = {
     ("queries/curation_ext.py", "p = scoped_persist(stats.crossJoin(F.broadcast(tot))).select("),
     ("queries/dedup.py", ".crossJoin(F.broadcast(multi))"),
     ("queries/dedup.py", "pair_stats.crossJoin(F.broadcast(doc_stats))"),
-    ("queries/mergeable.py", '.crossJoin(F.broadcast(b.agg(F.count("*").alias("exact_b"))))'),
     ("queries/mergeable.py", ".crossJoin(F.broadcast(exact))"),
     ("queries/mergeable.py", ".crossJoin(F.broadcast(ni))"),
     ("queries/mergeable.py", '.crossJoin(F.broadcast(scalars.select("theta")))'),
-    ("queries/mergeable.py", 'F.broadcast(a.join(b, "v").agg(F.count("*").alias("exact_inter")))'),
     ("queries/mergeable.py", "all_row = merged.crossJoin(F.broadcast(global_exact)).select("),
     ("queries/mergeable.py", "return F.broadcast(exacts).crossJoin(est).select("),
     ("queries/mergeable.py", "return exact.crossJoin(F.broadcast(med)).select("),

@@ -6,11 +6,16 @@ idempotent re-runs.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.datagen import gen_dim_atms, gen_fact_transactions, write_lot
-from logicash_etl_spark.pipeline.logicash import LogicashConfig, run_logicash_pipeline
+from logicash_etl_spark.pipeline import logicash
+from logicash_etl_spark.pipeline.logicash import (
+    LogicashConfig, build_gold, run_logicash_pipeline, validate,
+)
 
 AS_OF = "2026-01-01 00:00:00"
 
@@ -112,6 +117,56 @@ def test_idempotent_rerun(pipeline_result, spark):
     after = spark.read.parquet(f"{cfg.gold_dir}/top_atms_ranking").collect()
     assert sorted(map(str, before)) == sorted(map(str, after))
     assert [m["status"] for m in ctx2["__manifest__"]] == ["ok"] * 5
+
+
+def test_in_memory_silver_matches_read_back(pipeline_result, spark):
+    """gold and validate consume the silver DataFrame the pipeline
+    wrote; over the parquet read back from disk they give the same QA
+    rows and the same three gold tables."""
+    ctx, cfg, root = pipeline_result
+    silver = spark.read.parquet(f"{cfg.silver_dir}/transactions")
+    assert ctx["validate"] == {k: v.collect() for k, v in validate(spark, silver).items()}
+    for name, expected in build_gold(spark, silver, cfg).items():
+        on_disk = spark.read.parquet(f"{cfg.gold_dir}/{name}")
+        assert on_disk.columns == expected.columns
+        assert sorted(map(repr, on_disk.collect())) == sorted(map(repr, expected.collect()))
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_pipeline_frees_transform_cache(pipeline_result, spark, monkeypatch, tmp_path):
+    """The persisted joined frame lives only for one pipeline run,
+    whether the run returns or fails after the cache was filled. Each
+    run reads the lot through a fresh symlink, so its plan is new to
+    the cache manager (persisting an already-cached plan is a no-op
+    that would hide a leak). The check is on RDD ids, not the count:
+    Spark's context cleaner may free caches that earlier tests left
+    unreferenced while the run is in flight."""
+    ctx, cfg, root = pipeline_result
+    before = _persistent_rdd_ids(spark)
+
+    def fresh_cfg(name):
+        (tmp_path / name).symlink_to(cfg.raw_dir, target_is_directory=True)
+        return replace(
+            cfg,
+            raw_dir=str(tmp_path / name),
+            silver_dir=str(tmp_path / f"{name}_silver"),
+            gold_dir=str(tmp_path / f"{name}_gold"),
+        )
+
+    run_logicash_pipeline(spark, fresh_cfg("ok"))
+    assert _persistent_rdd_ids(spark) <= before
+
+    def failing_write(df, *args, **kwargs):
+        df.count()  # fills the transform cache
+        raise RuntimeError("silver write failed")
+
+    monkeypatch.setattr(logicash, "write_parquet_partitioned", failing_write)
+    with pytest.raises(RuntimeError, match="silver write failed"):
+        run_logicash_pipeline(spark, fresh_cfg("failed"))
+    assert _persistent_rdd_ids(spark) <= before
 
 
 def test_golden_outputs(pipeline_result, spark):
